@@ -243,18 +243,7 @@ object Main {
       // stale index dirs, /root/reference/column.go:638-641): vacuum every
       // index under <dir> — deletes RETIRED generations (folded into a
       // wider committed one), the expire-snapshots analogue
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val (triCols, numCols) = vfsidx.corpus.Ingest.registeredCols(spark, dir)
-      var cnt = 0
-      if (fs.exists(new org.apache.hadoop.fs.Path(s"$dir/segments")))
-        cnt += IndexBuild.vacuum(spark, dir)
-      triCols.foreach { c =>
-        cnt += vfsidx.build.TrigramIndex.vacuum(spark,
-          vfsidx.query.QueryParser.triDir(dir, c))
-      }
-      numCols.foreach(c =>
-        cnt += vfsidx.build.NumericIndex.vacuum(spark, dir, c))
+      val cnt = vfsidx.corpus.Ingest.vacuumAll(spark, dir)
       println(s"cleaned $dir: reclaimed $cnt retired generation(s)")
     case "query" :: table :: exprParts if exprParts.nonEmpty =>
       val expr = exprParts.mkString(" ")

@@ -37,9 +37,8 @@ final case class NumStats(n_rows: Long, integral: Boolean,
   * per ingested batch ([[ingestBatch]]) — O(new data); lookups read the
   * union of the survivor generations (each still pruned); the tiered
   * policy ([[compactTiered]]) folds accumulated small generations. Same
-  * generation machinery ([[IndexBuild.GenListing]]) as the word and trigram
-  * indexes: `_SUCCESS`-gated commits, containment-rule retirement, deferred
-  * vacuum.
+  * generation protocol ([[Generations]]) as the word and trigram indexes:
+  * `_SUCCESS`-gated commits, containment-rule retirement, deferred vacuum.
   *
   * At 100 TB the projection is a tiny fraction of the table (two int64
   * columns), the single `repartitionByRange` shuffle per generation is the
@@ -48,7 +47,7 @@ final case class NumStats(n_rows: Long, integral: Boolean,
   */
 object NumericIndex {
 
-  import IndexBuild.{GenListing, TableIO}
+  import IndexBuild.TableIO
 
   def colDir(root: String, col: String) = s"$root/num/$col"
   def dataGenDir(root: String, col: String, lo: Int, hi: Int) =
@@ -56,39 +55,39 @@ object NumericIndex {
   def statsGenDir(root: String, col: String, lo: Int, hi: Int) =
     s"${colDir(root, col)}/stats/gen=${lo}_$hi"
 
-  private def genTables(root: String, col: String)(l: Int, h: Int): Seq[String] =
-    Seq(dataGenDir(root, col, l, h), statsGenDir(root, col, l, h))
+  /** The numeric index's generation protocol ([[Generations]]): it has no
+    * runs stage, so the data gen dirs themselves are the slot markers; a
+    * generation commits data + stats, and a fold re-range-partitions the
+    * window's projections, integral only if every input was. */
+  private def generational(spark: SparkSession, root: String, column: String,
+                           numBuckets: Int = 32) =
+    new Generations[Boolean](spark,
+      listing = s"${colDir(root, column)}/data",
+      tables = (l, h) => Seq(dataGenDir(root, column, l, h), statsGenDir(root, column, l, h)),
+      slot = b => dataGenDir(root, column, b, b),
+      stats = statsGenDir(root, column, _, _),
+      statCols = Seq("n_rows", "integral"),
+      totals = _.forall(_(1) != 0L),
+      seal = (window, integral) => buildGeneration(spark,
+        spark.read.parquet(window.map { case (l, h) => dataGenDir(root, column, l, h) }: _*),
+        integral, root, column, window.head._1, window.last._2, numBuckets, force = false))
 
   def generations(spark: SparkSession, root: String, column: String): Seq[(Int, Int)] =
-    GenListing.survivors(GenListing.committed(
-      spark, s"${colDir(root, column)}/data", genTables(root, column)))
+    generational(spark, root, column).generations
 
   def vacuum(spark: SparkSession, root: String, column: String): Int =
-    GenListing.reclaim(spark, GenListing.committed(
-      spark, s"${colDir(root, column)}/data", genTables(root, column)),
-      genTables(root, column))
+    generational(spark, root, column).vacuum()
 
   def exists(spark: SparkSession, root: String, column: String): Boolean =
     generations(spark, root, column).nonEmpty
 
   /** Highest generation batch id PRESENT on disk (committed or reserved),
-    * -1 for none — the monotone slot allocator. The numeric index has no
-    * runs stage, so the data gen dirs themselves are the reservation
-    * markers ([[reserveSlot]] mkdirs one before it is durably recorded). */
-  def maxBatch(spark: SparkSession, root: String, column: String): Int = {
-    val p = new org.apache.hadoop.fs.Path(s"${colDir(root, column)}/data")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) -1
-    else fs.listStatus(p).map(_.getPath.getName)
-      .collect { case n if n.startsWith("gen=") =>
-        n.stripPrefix("gen=").split('_')(1).toInt }
-      .foldLeft(-1)(math.max)
-  }
+    * -1 for none — the monotone slot allocator. */
+  def maxBatch(spark: SparkSession, root: String, column: String): Int =
+    generational(spark, root, column).maxBatch
 
-  def reserveSlot(spark: SparkSession, root: String, column: String, batch: Int): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dataGenDir(root, column, batch, batch))
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(p)
-  }
+  def reserveSlot(spark: SparkSession, root: String, column: String, batch: Int): Unit =
+    generational(spark, root, column).reserveSlot(batch)
 
   private def isIntegral(dt: DataType): Boolean = dt match {
     case ByteType | ShortType | IntegerType | LongType => true
@@ -122,8 +121,7 @@ object NumericIndex {
   def ingestBatch(spark: SparkSession, newRows: DataFrame, idCol: String,
                   numCol: String, root: String, batchId: Int,
                   numBuckets: Int = 32, overwrite: Boolean = false): Unit = {
-    val done = genTables(root, numCol)(batchId, batchId).forall(TableIO.done(spark, _))
-    if (!overwrite && done) return
+    if (!overwrite && generational(spark, root, numCol).isSealed(batchId, batchId)) return
     val proj = newRows.select(
       col(numCol).cast("long").as("value"), col(idCol).cast("long").as("doc_id"))
     val buckets = IndexBuild.ingestBuckets(proj.count(), numBuckets, IngestRowsPerBucket)
@@ -133,85 +131,50 @@ object NumericIndex {
   }
 
   /** Write one generation from a (value, doc_id) projection: the single
-    * range-partitioning shuffle, then stats off the written parquet
-    * (footer-metadata count + one sketch pass over the tiny projection). */
+    * range-partitioning shuffle, with the row count and max doc_id
+    * OBSERVED on the write itself, then one sketch pass over the written
+    * projection for the stats. The observe sits above the shuffle, so the
+    * range partitioner's sampling job never runs the observed node. Only a
+    * resume (data committed, stats not) reads the two values back. */
   private def buildGeneration(spark: SparkSession, proj: DataFrame, integral: Boolean,
                               root: String, col0: String, lo: Int, hi: Int,
                               numBuckets: Int, force: Boolean): Unit = {
     import spark.implicits._
     val out = dataGenDir(root, col0, lo, hi)
-    if (force || !TableIO.done(spark, out)) {
-      TableIO.write(
-        proj.repartitionByRange(numBuckets, col("value"))
-          .sortWithinPartitions(col("value"), col("doc_id")), out)
-    }
+    val observed =
+      if (!force && TableIO.done(spark, out)) None
+      else {
+        val obs = new org.apache.spark.sql.Observation(s"num_${col0}_${lo}_$hi")
+        TableIO.write(
+          proj.repartitionByRange(numBuckets, col("value"))
+            .sortWithinPartitions(col("value"), col("doc_id"))
+            .observe(obs, count(lit(1)).as("n"), max($"doc_id").as("mx")), out)
+        val m = obs.get
+        Some((m("n").asInstanceOf[Long], Option(m("mx")).fold(-1L)(_.asInstanceOf[Long])))
+      }
     val stDir = statsGenDir(root, col0, lo, hi)
     if (force || !TableIO.done(spark, stDir)) {
       val written = spark.read.parquet(out)
-      val nRows = written.count()   // parquet-footer metadata, no data scan
+      val (nRows, maxId) = observed.getOrElse {
+        val r = written.agg(count(lit(1)), max($"doc_id")).head()
+        (r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1))
+      }
       val probs = (0 to QuantilePoints).map(_.toDouble / QuantilePoints).toArray
       val qs =
         if (nRows == 0) Array.empty[Double]
         else written.stat.approxQuantile("value", probs, 0.001)
-      val maxId =
-        if (nRows == 0) -1L
-        else written.agg(max($"doc_id")).as[Long].head()
       TableIO.write(Seq(NumStats(nRows, integral, qs, maxId)).toDF(), stDir)
     }
   }
 
-  /** Fold contiguous generations: re-range-partition the union of their
-    * projections into one combined generation (inputs retired via the
-    * containment rule, reclaimed by [[vacuum]] later). */
-  private def fold(spark: SparkSession, root: String, column: String,
-                   gens: Seq[(Int, Int)], numBuckets: Int,
-                   knownIntegral: Option[Boolean] = None): Unit = {
-    import spark.implicits._
-    require(gens.size >= 2, "fold needs at least two generations")
-    gens.sliding(2).foreach {
-      case Seq((_, h1), (l2, _)) =>
-        require(l2 == h1 + 1,
-          s"numeric fold window spans a coverage gap between $h1 and $l2")
-      case _ => ()
-    }
-    // pre-computed by the tiered policy's one statPerGen job, or one tiny
-    // job here for direct callers
-    val integral = knownIntegral.getOrElse(spark.read
-      .parquet(gens.map { case (l, h) => statsGenDir(root, column, l, h) }: _*)
-      .as[NumStats].collect().forall(_.integral))
-    val data = spark.read
-      .parquet(gens.map { case (l, h) => dataGenDir(root, column, l, h) }: _*)
-    buildGeneration(spark, data, integral, root, column,
-      gens.map(_._1).min, gens.map(_._2).max, numBuckets, force = false)
-  }
-
   /** Size-tiered bounded compaction (same policy as
-    * [[IndexBuild.compactTiered]]). */
+    * [[IndexBuild.compactTiered]], [[Generations.compactTiered]]). */
   def compactTiered(spark: SparkSession, root: String, column: String,
                     maxGenerations: Int = 4, tierFanout: Int = 4,
                     numBuckets: Int = 32, reclaim: Boolean = true,
-                    maxFoldDocs: Long = Long.MaxValue): Boolean = {
-    import spark.implicits._
-    val gens = generations(spark, root, column)
-    if (gens.size <= maxGenerations) false
-    else {
-      // one job across all generations' stats (IndexBuild.statPerGen):
-      // sizes for the window choice AND the fold's integral flag together
-      val st = IndexBuild.statPerGen(
-        spark, Seq(statsGenDir(root, column, _, _)), gens,
-        Seq("n_rows", "integral"))
-        .map { case (g, rows) => g -> (rows.map(_(0)).sum, rows.forall(_(1) != 0L)) }
-      GenListing.pickTieredWindow(GenListing.contiguousGroups(gens), st(_)._1,
-        tierFanout, maxFoldDocs) match {
-        case Some(win) =>
-          fold(spark, root, column, win, numBuckets,
-            Some(win.forall(st(_)._2)))
-          if (reclaim) vacuum(spark, root, column)
-          true
-        case None => false
-      }
-    }
-  }
+                    maxFoldDocs: Long = Long.MaxValue): Boolean =
+    generational(spark, root, column, numBuckets)
+      .compactTiered(maxGenerations, tierFanout, maxFoldDocs, reclaim)
 
   /** Per-column merged-stats cache (shared token-validated machinery:
     * [[IndexBuild.StatsCache]]): a rebuilt or refreshed index at the same
@@ -269,11 +232,8 @@ object NumericIndex {
     math.min(1.0, inside.toDouble / st.quantiles.length + 2.0 / st.quantiles.length)
   }
 
-  private def read(spark: SparkSession, root: String, column: String): DataFrame = {
-    val gens = generations(spark, root, column)
-    require(gens.nonEmpty, s"no numeric-index generations for $column under $root")
-    spark.read.parquet(gens.map { case (l, h) => dataGenDir(root, column, l, h) }: _*)
-  }
+  private def read(spark: SparkSession, root: String, column: String): DataFrame =
+    generational(spark, root, column).read(dataGenDir(root, column, _, _))
 
   /** doc_ids with value == v (reference P2 as an index lookup). Exact even
     * for fractional sources: only x == v.0 truncates to v AND satisfies the

@@ -198,14 +198,31 @@ private[build] object Spimi {
       }
     }
 
+  /** Read the chunk-run batch `dirs` of a generation. Migration gate: runs
+    * written by a pre-chunk-format build (raw posting rows) fail with an
+    * instruction, not an analysis error or a mid-merge failure. Checked PER
+    * dir — a merged-read schema samples one footer and would let a mixed
+    * old/new set slip through to a wrong avgdl or a mid-shuffle NPE. */
+  def readChunkRuns(spark: org.apache.spark.sql.SparkSession,
+                    dirs: Seq[String]): org.apache.spark.sql.DataFrame = {
+    dirs.foreach { d =>
+      require(spark.read.parquet(d).schema.fieldNames.contains("pre_shard"),
+        s"$d was written by a pre-chunk-format build (raw posting rows): " +
+          "delete the index directory and rebuild")
+    }
+    spark.read.parquet(dirs: _*)
+  }
+
   /** Run `main` while `sideJobs` (small independent Spark jobs: the
     * generation's dictionary agg and 1-row stats write) execute on a
     * concurrent pool, joining them afterwards — or run everything inline
     * when there is no `main` work (a resume where only side tables are
-    * missing). A `main` failure still reaps the pool (the generation stays
-    * uncommitted either way — resume redoes the rest); side-job failures
-    * surface on join. Shared by the word and trigram buildGenerations so
-    * the concurrency/error contract cannot diverge between them. */
+    * missing). Side-job failures surface on join. A `main` failure still
+    * joins every side job before it propagates, each side failure attached
+    * to it as suppressed — none is lost (the generation stays uncommitted
+    * either way; resume redoes the rest). Shared by the word and trigram
+    * buildGenerations so the concurrency/error contract cannot diverge
+    * between them. */
   def withSideJobs(needMain: Boolean, sideJobs: Seq[() => Unit])(main: => Unit): Unit = {
     val pool =
       if (needMain && sideJobs.nonEmpty)
@@ -214,7 +231,14 @@ private[build] object Spimi {
     val futures = pool.toSeq.flatMap(p => sideJobs.map(f =>
       p.submit(new java.util.concurrent.Callable[Unit] { def call(): Unit = f() })))
     try if (needMain) main
-    finally pool.foreach(_.shutdown())
+    catch { case scala.util.control.NonFatal(e) =>
+      futures.foreach(f => scala.util.Try(f.get()).failed.foreach {
+        case x: java.util.concurrent.ExecutionException if x.getCause != null =>
+          e.addSuppressed(x.getCause)
+        case x => e.addSuppressed(x)
+      })
+      throw e
+    } finally pool.foreach(_.shutdown())
     if (pool.isDefined) futures.foreach(_.get())
     else sideJobs.foreach(f => f())
   }

@@ -50,7 +50,7 @@ final case class TriStats(n_rows: Long, max_doc_id: Long)
   *        (key, pre_shard, first_doc, last_doc, count, delta-varint bytes)
   *   chunks --repartition(key, pre_shard) --mergeChunks-->
   *        tri_segments (canonical blocked varbyte)            [resumable]
-  *   tri_dict (key, df) derived from segment metadata (Σ count per key)
+  *   tri_dict (key, df) derived from the chunk runs (Σ count per key)
   *
   * The merge shuffle therefore moves ~an order of magnitude fewer rows and
   * ~5x fewer bytes than a raw-postings shuffle, and no wide-row sort ever
@@ -90,28 +90,31 @@ object TrigramIndex {
       tierFanout: Int = 4,
       maxFoldDocs: Long = Long.MaxValue) // see IndexBuild.BuildConfig.maxFoldDocs
 
-  private def genTables(dir: String)(l: Int, h: Int): Seq[String] =
-    Seq(segmentsGenDir(dir, l, h), dictGenDir(dir, l, h), statsGenDir(dir, l, h))
+  /** The trigram index's generation protocol ([[Generations]]): slots are
+    * the `tri_runs/batch=N` dirs, a generation commits segments +
+    * dictionary + stats, and a fold sums n_rows and takes the max
+    * max_doc_id. */
+  private def generational(spark: SparkSession, dir: String, cfg: TriConfig = TriConfig()) =
+    new Generations[(Long, Long)](spark,
+      listing = s"$dir/tri_segments",
+      tables = (l, h) =>
+        Seq(segmentsGenDir(dir, l, h), dictGenDir(dir, l, h), statsGenDir(dir, l, h)),
+      slot = runsBatchDir(dir, _),
+      stats = statsGenDir(dir, _, _),
+      statCols = Seq("n_rows", "max_doc_id"),
+      totals = rows => (rows.map(_(0)).sum, rows.map(_(1)).foldLeft(-1L)(math.max)),
+      seal = { case (window, (nRows, maxId)) =>
+        buildGeneration(spark, dir, Generations.batches(window), cfg, nRows, maxId)
+      })
 
   /** Highest runs batch id PRESENT on disk (committed or reserved), -1 for
-    * none — the monotone slot allocator (same contract as
-    * [[IndexBuild.maxRunsBatch]]). */
-  def maxBatch(spark: SparkSession, dir: String): Int = {
-    val p = new org.apache.hadoop.fs.Path(runsDir(dir))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) -1
-    else fs.listStatus(p).map(_.getPath.getName)
-      .collect { case n if n.startsWith("batch=") => n.stripPrefix("batch=").toInt }
-      .foldLeft(-1)(math.max)
-  }
+    * none — the monotone slot allocator. */
+  def maxBatch(spark: SparkSession, dir: String): Int = generational(spark, dir).maxBatch
 
   /** Reserve a runs slot (mkdir the batch dir) BEFORE durably recording it,
-    * so other allocators skip past even if the recording actor crashes —
-    * the same protocol as the word index's streaming slots. */
-  def reserveSlot(spark: SparkSession, dir: String, batch: Int): Unit = {
-    val p = new org.apache.hadoop.fs.Path(runsBatchDir(dir, batch))
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(p)
-  }
+    * so other allocators skip past even if the recording actor crashes. */
+  def reserveSlot(spark: SparkSession, dir: String, batch: Int): Unit =
+    generational(spark, dir).reserveSlot(batch)
 
   /** Per-index merged-stats cache (shared token-validated machinery:
     * [[IndexBuild.StatsCache]] — refreshes/compactions/rebuilds invalidate
@@ -136,31 +139,20 @@ object TrigramIndex {
   def coveredMaxDocId(spark: SparkSession, dir: String): Option[Long] =
     statsMerged(spark, dir).map(_.max_doc_id)
 
-  /** Same contract as [[IndexBuild.generations]] (shared listing /
-    * containment machinery: [[IndexBuild.GenListing]]). */
+  /** Same contract as [[IndexBuild.generations]]. */
   def generations(spark: SparkSession, dir: String): Seq[(Int, Int)] =
-    IndexBuild.GenListing.survivors(
-      IndexBuild.GenListing.committed(spark, s"$dir/tri_segments", genTables(dir)))
+    generational(spark, dir).generations
 
   /** Reclaim retired (folded-over) generation dirs - see
     * [[IndexBuild.vacuum]] for the read-safety rationale. */
-  def vacuum(spark: SparkSession, dir: String): Int =
-    IndexBuild.GenListing.reclaim(spark,
-      IndexBuild.GenListing.committed(spark, s"$dir/tri_segments", genTables(dir)),
-      genTables(dir))
+  def vacuum(spark: SparkSession, dir: String): Int = generational(spark, dir).vacuum()
 
-  def readSegments(spark: SparkSession, dir: String): DataFrame = {
-    val gens = generations(spark, dir)
-    require(gens.nonEmpty, s"no completed trigram generations under $dir")
-    spark.read.parquet(gens.map { case (l, h) => segmentsGenDir(dir, l, h) }: _*)
-  }
+  def readSegments(spark: SparkSession, dir: String): DataFrame =
+    generational(spark, dir).read(segmentsGenDir(dir, _, _))
 
   /** Raw per-generation dictionary rows (key, df) — df is additive. */
-  def readDictRaw(spark: SparkSession, dir: String): DataFrame = {
-    val gens = generations(spark, dir)
-    require(gens.nonEmpty, s"no completed trigram generations under $dir")
-    spark.read.parquet(gens.map { case (l, h) => dictGenDir(dir, l, h) }: _*)
-  }
+  def readDictRaw(spark: SparkSession, dir: String): DataFrame =
+    generational(spark, dir).read(dictGenDir(dir, _, _))
 
   def exists(spark: SparkSession, dir: String): Boolean =
     generations(spark, dir).nonEmpty
@@ -190,20 +182,9 @@ object TrigramIndex {
     * word-index build; [[ingestBatch]] + [[compactTail]]/[[remerge]] extend
     * it incrementally (log-structured generations, same scheme as
     * [[IndexBuild]]). */
-  private val verbose = sys.env.contains("GRAFT_BUILD_VERBOSE")
-  @inline private def timed[A](name: String)(f: => A): A = {
-    if (!verbose) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"TRI-STAGE $name: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-  }
-
   def build(spark: SparkSession, df: DataFrame, idCol: String, strCol: String,
             dir: String, cfg: TriConfig = TriConfig()): Unit = {
-    if (!TableIO.done(spark, runsBatchDir(dir, 0))) timed("tri_runs") {
+    if (!TableIO.done(spark, runsBatchDir(dir, 0))) IndexBuild.timed("tri_runs", "TRI-STAGE") {
       TableIO.write(chunkRuns(df, idCol, strCol, cfg.shardSize * 1024), runsBatchDir(dir, 0))
     }
     val (nRows, maxId) = countAndMax(df, idCol)
@@ -228,8 +209,8 @@ object TrigramIndex {
                   strCol: String, dir: String, batchId: Int,
                   cfg: TriConfig = TriConfig(), overwrite: Boolean = false): Unit = {
     val bDir = runsBatchDir(dir, batchId)
-    val genDone = genTables(dir)(batchId, batchId).forall(TableIO.done(spark, _))
-    if (!overwrite && TableIO.done(spark, bDir) && genDone) return
+    if (!overwrite && TableIO.done(spark, bDir) &&
+        generational(spark, dir).isSealed(batchId, batchId)) return
     if (overwrite || !TableIO.done(spark, bDir))
       TableIO.write(chunkRuns(newDocs, idCol, strCol, cfg.shardSize * 1024), bDir)
     // bucket count sized to the batch: a small refresh generation must not
@@ -240,95 +221,25 @@ object TrigramIndex {
       nNew, maxId, force = overwrite)
   }
 
-  /** Fold contiguous generations into one covering their union by
-    * re-shuffling exactly those batches' runs; delete the inputs only after
-    * the combined generation commits ([[generations]] hides contained ranges
-    * in the interim, so readers stay exact). */
-  private def fold(spark: SparkSession, dir: String, gens: Seq[(Int, Int)],
-                   cfg: TriConfig,
-                   knownTotals: Option[(Long, Long)] = None): Unit = {
-    import spark.implicits._
-    require(gens.size >= 2, "fold needs at least two generations")
-    // contiguous coverage required — a gap is a reserved-but-unsealed slot
-    // whose later generation a spanning fold would bury (see IndexBuild.fold)
-    gens.sliding(2).foreach {
-      case Seq((_, h1), (l2, _)) =>
-        require(l2 == h1 + 1,
-          s"trigram fold window spans a coverage gap between $h1 and $l2")
-      case _ => ()
-    }
-    // (Σ n_rows, max max_doc_id) — pre-computed by the tiered policy's one
-    // statPerGen job, or one tiny job here for direct callers
-    val (nRows, maxId) = knownTotals.getOrElse {
-      val st = spark.read
-        .parquet(gens.map { case (l, h) => statsGenDir(dir, l, h) }: _*)
-        .as[TriStats].collect()
-      (st.map(_.n_rows).sum, if (st.isEmpty) -1L else st.map(_.max_doc_id).max)
-    }
-    buildGeneration(spark, dir, gens.flatMap { case (l, h) => l to h }, cfg,
-      nRows, maxId)
-    // inputs retired, not deleted — [[vacuum]] reclaims them after a grace
-    // period so in-flight readers keep their files (see IndexBuild.fold)
-  }
-
-  /** Per-generation (n_rows, max_doc_id) for the tiered policy AND its
-    * fold — one job across all generations ([[IndexBuild.statPerGen]]). */
-  private def genStats(spark: SparkSession, dir: String,
-                       gens: Seq[(Int, Int)]): Map[(Int, Int), (Long, Long)] =
-    IndexBuild.statPerGen(spark, Seq(statsGenDir(dir, _, _)), gens,
-      Seq("n_rows", "max_doc_id"))
-      .map { case (g, rows) => g -> (rows.map(_(0)).sum, rows.map(_(1)).max) }
-
   /** Size-tiered bounded compaction — same policy as
-    * [[IndexBuild.compactTiered]]: above `maxGenerations` survivors, fold
-    * the cheapest window of 2..tierFanout adjacent similar-sized
-    * generations, never across a coverage gap. */
+    * [[IndexBuild.compactTiered]] ([[Generations.compactTiered]]). */
   def compactTiered(spark: SparkSession, dir: String, cfg: TriConfig = TriConfig(),
-                    reclaim: Boolean = true): Boolean = {
-    val gens = generations(spark, dir)
-    if (gens.size <= cfg.maxGenerations) false
-    else {
-      val st = genStats(spark, dir, gens)
-      IndexBuild.GenListing.pickTieredWindow(
-        IndexBuild.GenListing.contiguousGroups(gens), st(_)._1, cfg.tierFanout,
-        cfg.maxFoldDocs) match {
-        case Some(win) =>
-          fold(spark, dir, win, cfg,
-            Some((win.map(st(_)._1).sum, win.map(st(_)._2).max)))
-          if (reclaim) vacuum(spark, dir)
-          true
-        case None => false
-      }
-    }
-  }
+                    reclaim: Boolean = true): Boolean =
+    generational(spark, dir, cfg)
+      .compactTiered(cfg.maxGenerations, cfg.tierFanout, cfg.maxFoldDocs, reclaim)
 
   /** Explicit tail compaction: fold every generation except the base, one
     * pass per contiguous group (see [[IndexBuild.compactTail]]; pass
     * reclaim=false when concurrent readers may be mid-scan). */
   def compactTail(spark: SparkSession, dir: String, cfg: TriConfig = TriConfig(),
-                  reclaim: Boolean = true): Boolean = {
-    val gens = generations(spark, dir)
-    if (gens.size < 3) false
-    else {
-      val folded = IndexBuild.GenListing.contiguousGroups(gens.drop(1)).filter(_.size >= 2)
-      folded.foreach(g => fold(spark, dir, g, cfg))
-      if (reclaim) vacuum(spark, dir)
-      folded.nonEmpty
-    }
-  }
+                  reclaim: Boolean = true): Boolean =
+    generational(spark, dir, cfg).compactTail(reclaim)
 
   /** Full compaction: fold ALL generations into one per contiguous group
     * (reference M4/M8). */
   def remerge(spark: SparkSession, dir: String, cfg: TriConfig = TriConfig(),
-              reclaim: Boolean = true): Unit = {
-    val gens = generations(spark, dir)
-    require(gens.nonEmpty, s"no trigram generations under $dir")
-    if (gens.size >= 2) {
-      IndexBuild.GenListing.contiguousGroups(gens).filter(_.size >= 2)
-        .foreach(g => fold(spark, dir, g, cfg))
-      if (reclaim) vacuum(spark, dir)
-    }
-  }
+              reclaim: Boolean = true): Unit =
+    generational(spark, dir, cfg).remerge(reclaim)
 
   /** Dict + stats + segments for the given runs `batches` under
     * `gen=<min>_<max>`; `_SUCCESS`-gated per table for resume (bypassed
@@ -339,22 +250,11 @@ object TrigramIndex {
     import spark.implicits._
     val (lo, hi) = (batches.min, batches.max)
     val gen = s"${lo}_$hi"
-    lazy val runs = {
-      // migration gate: tri_runs written by a pre-chunk-format build (raw
-      // (key, doc_id) rows) must fail with an instruction, not mid-merge.
-      // Checked PER batch dir (a merged-read schema samples one footer and
-      // would let a mixed old/new batch set through).
-      batches.foreach { b =>
-        require(spark.read.parquet(runsBatchDir(dir, b)).schema.fieldNames.contains("pre_shard"),
-          s"tri_runs batch=$b under $dir was written by a pre-chunk-format " +
-            "build: delete the index directory and rebuild")
-      }
-      spark.read.parquet(batches.map(runsBatchDir(dir, _)): _*)
-    }
+    lazy val runs = Spimi.readChunkRuns(spark, batches.map(runsBatchDir(dir, _)))
 
     val stDir = statsGenDir(dir, lo, hi)
     val needStats = force || !TableIO.done(spark, stDir)
-    def writeStats(): Unit = timed(s"tri_stats:$gen") {
+    def writeStats(): Unit = IndexBuild.timed(s"tri_stats:$gen", "TRI-STAGE") {
       TableIO.write(Seq(TriStats(nRows, maxDocId)).toDF(), stDir)
     }
 
@@ -367,7 +267,7 @@ object TrigramIndex {
     // tiny stats write rides the same pool.
     val dDir = dictGenDir(dir, lo, hi)
     val needDict = force || !TableIO.done(spark, dDir)
-    def writeDict(): Unit = timed(s"tri_dict:$gen") {
+    def writeDict(): Unit = IndexBuild.timed(s"tri_dict:$gen", "TRI-STAGE") {
       TableIO.write(
         runs.groupBy($"key").agg(sum($"count").cast("long").as("df")), dDir)
     }
@@ -378,7 +278,7 @@ object TrigramIndex {
       (if (needDict) Seq(() => writeDict()) else Nil) ++
         (if (needStats) Seq(() => writeStats()) else Nil)
 
-    Spimi.withSideJobs(needSegs, sideJobs) { timed(s"tri_segments:$gen") {
+    Spimi.withSideJobs(needSegs, sideJobs) { IndexBuild.timed(s"tri_segments:$gen", "TRI-STAGE") {
       val t0 = System.currentTimeMillis()
       // SPIMI chunked merge (north_star: "per-partition posting lists ...
       // sort-merge them into a global segmented inverted index"): the map
@@ -390,8 +290,8 @@ object TrigramIndex {
       // group's pooled primitive ids (bounded by the pre_shard doc range).
       // `pre_shard` = doc / preShardDocs bounds any reducer group — the
       // Zipf-head safety the raw pipeline got from df-based salting, now
-      // without needing df before the shuffle (so the dictionary can
-      // derive from the OUTPUT below instead of a second full runs scan).
+      // without needing df before the shuffle (the dictionary sums the
+      // chunk runs' counts on the side pool, never the segments).
       val salt = cfg.saltThreshold
       val shardSz = cfg.shardSize
       // per-partition lineage (north_rule) observed ON the write action via
@@ -417,8 +317,7 @@ object TrigramIndex {
         LineageRow("tri_segments", gen, pid, s.first, s.last,
           0L, s.nPostings, s.bytes, System.currentTimeMillis() - t0)
       }
-      if (lin.nonEmpty)
-        TableIO.append(spark.createDataset(lin.toIndexedSeq).toDF(), lineageDir(dir))
+      IndexBuild.appendLineage(spark, lineageDir(dir), lin)
     }}
   }
 

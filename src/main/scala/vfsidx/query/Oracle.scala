@@ -32,7 +32,7 @@ object Oracle {
     val p = postings(docs).filter($"term".isin(terms: _*)).cache()
     val nDocs = docs.count().toDouble
     // avgdl over ALL docs (zero-token docs included) — must equal the
-    // index's CorpusStats statistic sum(tf)/nDocs (IndexBuild.buildDerived)
+    // index's CorpusStats statistic sum(tf)/nDocs (IndexBuild.buildGeneration)
     // or scores diverge on corpora containing empty documents.
     val avgdl = IndexBuild.tokenize(docs).groupBy($"doc_id").agg(first($"dl").as("dl"))
       .agg(sum($"dl")).as[Long].head().toDouble / nDocs

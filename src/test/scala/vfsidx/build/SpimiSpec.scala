@@ -162,4 +162,17 @@ class SpimiSpec extends AnyFunSuite {
     assert(acc.value.keySet == Set(3, 4))
     assert(acc.value(3).nPostings == 100L)
   }
+
+  test("withSideJobs: a side job's failure rides on main's exception as suppressed") {
+    val sideFailure = new IllegalStateException("dictionary write failed")
+    val ran = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val e = intercept[RuntimeException](
+      Spimi.withSideJobs(needMain = true,
+        Seq(() => ran.set(true), () => throw sideFailure)) {
+        throw new RuntimeException("segments write failed")
+      })
+    assert(e.getMessage == "segments write failed")
+    assert(e.getSuppressed.contains(sideFailure))
+    assert(ran.get(), "the healthy side job still ran to completion")
+  }
 }
